@@ -3,9 +3,9 @@
 Each rule is a pure function returning either a driver-side
 :class:`~big_data_validator_spark.report.RuleResult` (for schema-level rules
 that act on column *lists*, not data) or Catalyst expressions / DataFrames
-(for row-level rules).  The runner composes row-level rules into a single
-aggregation pass — the reference runs one Spark job per rule and rescans
-the file each time (SURVEY.md §3).
+(for row-level rules).  The runner observes the row-level rules on the
+scans of one fused job — the reference runs one Spark job per rule and
+rescans the file each time (SURVEY.md §3).
 """
 
 from __future__ import annotations
@@ -89,38 +89,29 @@ def corrupt_rows(df: DataFrame) -> DataFrame:
     return df.filter(F.col(CORRUPT_RECORD_COL).isNotNull())
 
 
-def rule_csv_parser_verdict(df: DataFrame) -> tuple[RuleResult, DataFrame]:
+def rule_csv_parser_verdict(
+    bad: DataFrame, n_corrupt: int
+) -> tuple[RuleResult, DataFrame]:
     """Escalated check: defer to Spark's quote/multiline-aware CSV parser.
 
     The reference falls back to this when the line-level count mismatches
     (``big_data_validator.py:198-205``), because a raw line split cannot see
-    embedded newlines or separators inside quoted fields.  Returns the rule
-    outcome and the bad-row DataFrame for the failure sink.
+    embedded newlines or separators inside quoted fields.  ``bad`` is the
+    parser's corrupt-row frame (:func:`corrupt_rows`) and ``n_corrupt`` its
+    row count, already observed on the scan that built it — the verdict runs
+    no Spark job of its own, where the reference ran ``head(1)`` (``:163``).
+    Returns the rule outcome and ``bad``, the rows for the failure sink.
 
-    Early-exits via ``take(1)`` (the ``head(1)`` of ``:163``).  ``take``
-    deliberately references every column: Spark refuses queries that prune a
-    raw CSV scan down to only the corrupt-record column
-    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) — the same
-    restriction that forced the reference's ``cache()``.  The returned
-    bad-row frame is cached when non-empty so the failure-sink write reuses
-    the probe's scan; the caller must ``unpersist()`` it (the runner does,
-    in a ``finally`` — fixing the reference's cache leak on the failure
-    path, ``big_data_validator.py:161-169``).
+    The runner owns ``bad``'s cache: it fills it in the same job as the line
+    scan and releases it in a ``finally`` (the reference leaks its cache on
+    the failure path, ``big_data_validator.py:161-169``).
     """
-    if has_trailing_unnamed_column(df):
-        return (
-            RuleResult(
-                rule="csv_parser_verdict",
-                passed=True,
-                details={"note": "trailing unnamed column; mismatch ignored"},
-            ),
-            df.limit(0),
+    if has_trailing_unnamed_column(bad):
+        verdict = RuleResult(
+            rule="csv_parser_verdict",
+            passed=True,
+            details={"note": "trailing unnamed column; mismatch ignored"},
         )
-    bad = corrupt_rows(df).cache()
-    passed = len(bad.take(1)) == 0
-    if passed:
-        bad.unpersist()
-    return (
-        RuleResult(rule="csv_parser_verdict", passed=passed),
-        bad,
-    )
+    else:
+        verdict = RuleResult(rule="csv_parser_verdict", passed=n_corrupt == 0)
+    return verdict, bad

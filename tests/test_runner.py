@@ -4,6 +4,8 @@ escalation on unbalanced quotes, failure sink on genuinely bad rows."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from big_data_validator_spark.contract import ColumnSpec, TableContract
@@ -192,3 +194,186 @@ def test_type_enforcement_flags_bad_values(spark, tmp_path):
     assert per["ID"] == 2      # 'x' not a number, '' violates NOT NULL
     assert per["AMOUNT"] == 1  # 'bad'
     assert per["DAY"] == 1     # 99/99/9999
+
+
+# ---------------------------------------------------------------- job budget
+
+
+@contextlib.contextmanager
+def job_group(spark, group):
+    """Tag every job started inside the block; yields a job counter."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+
+    def n_jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        yield n_jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def cache_is_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize(
+    "name, body, n_jobs, ok",
+    [
+        # header probe + the fused line/parse job
+        ("CLEAN", '"1"|"Ada"|"Lovelace"|"10/12/1815"\n', 2, True),
+        # the fused job's observed corrupt count clears the escalation
+        ("NEWLINE", '"1"|"Multi\nline"|"Turner"|"23/1/2002"\n', 2, True),
+        # ... plus the failure-sink write from the cached bad rows
+        ("RAGGED", '"1"|"Ada"|"Lovelace"|"10/12/1815"\n"2"|"Bob"\n', 3, False),
+    ],
+    ids=["clean", "newline-clears", "ragged-sinks"],
+)
+def test_validate_csv_job_budget(spark, tmp_path, name, body, n_jobs, ok):
+    p = tmp_path / f"{name}.csv"
+    p.write_text('"ID"|"NAME"|"SURNAME"|"BIRTH_DATE"\n' + body)
+    runner = ValidationRunner(
+        spark, RunnerConfig(failure_base_dir=str(tmp_path / "sink"))
+    )
+    spark.catalog.clearCache()
+    with job_group(spark, f"job-budget-{name}") as jobs:
+        report = runner.validate_csv(name, str(p), make_contract())
+        assert jobs() == n_jobs
+    assert report.ok is ok, report.to_json()
+    assert (report.failure_sink_path is not None) is (not ok)
+    assert cache_is_empty(spark)
+
+
+def test_cache_released_when_sink_write_raises(spark, tmp_path):
+    """A failure_base_dir that is a regular file makes the sink write fail;
+    the cached bad rows must still be released."""
+    p = tmp_path / "BAD.csv"
+    p.write_text("A|B|C\n1|2|3\n1|2\n")
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_text("")
+    contract = TableContract(
+        columns=[ColumnSpec("A"), ColumnSpec("B"), ColumnSpec("C")],
+        field_separator="|",
+    )
+    runner = ValidationRunner(spark, RunnerConfig(failure_base_dir=str(blocker)))
+    spark.catalog.clearCache()
+    with pytest.raises(Exception):
+        runner.validate_csv("BAD", str(p), contract)
+    assert cache_is_empty(spark)
+
+
+# ------------------------------------------- semantics on the fused job's paths
+
+
+def test_trailing_unnamed_column_passes_field_count(spark, tmp_path):
+    """A header ending in the delimiter names a trailing "" column; rows
+    without the trailing delimiter miscount, and the reference's hotfix
+    passes them (big_data_validator.py:150-158)."""
+    p = tmp_path / "TRAIL.csv"
+    p.write_text("A|B|C|\n1|2|3|\n4|5|6\n")
+    contract = TableContract(
+        columns=[ColumnSpec("A", "NUMBER"), ColumnSpec("B"), ColumnSpec("C")],
+        field_separator="|",
+    )
+    runner = ValidationRunner(
+        spark, RunnerConfig(failure_base_dir=str(tmp_path / "sink"))
+    )
+    report = runner.validate_csv("TRAIL", str(p), contract)
+    assert report.ok, report.to_json()
+    fc = {r.rule: r for r in report.results}["field_count_naive"]
+    assert fc.details["escalated"] is True
+    assert fc.violation_count == 0
+    assert report.failure_sink_path is None
+    assert not (tmp_path / "sink").exists()
+    assert cache_is_empty(spark)
+
+
+def _ragged(tmp_path):
+    p = tmp_path / "RAG.csv"
+    p.write_text("A|B|C\n1|x|3\n1|2\n4|5|6\n7|8\n")
+    return str(p)
+
+
+def test_enforce_types_off_matches_default_verdict_and_sink(spark, tmp_path):
+    """enforce_types=False takes the lazy path (line job, then the parse on
+    mismatch) and must give the same field-count verdict and sink rows as
+    the fused path."""
+    csv = _ragged(tmp_path)
+    contract = TableContract(
+        columns=[ColumnSpec("A"), ColumnSpec("B", "NUMBER"), ColumnSpec("C")],
+        field_separator="|",
+    )
+    reports, sinks = {}, {}
+    for enforce in (True, False):
+        runner = ValidationRunner(
+            spark,
+            RunnerConfig(
+                enforce_types=enforce, failure_base_dir=str(tmp_path / f"s{enforce}")
+            ),
+        )
+        rep = runner.validate_csv("RAG", csv, contract)
+        reports[enforce] = {r.rule: r for r in rep.results}
+        sinks[enforce] = sorted(
+            tuple(r) for r in spark.read.parquet(rep.failure_sink_path).collect()
+        )
+        assert cache_is_empty(spark)
+    assert "type_enforcement" not in reports[False]
+    assert reports[True]["type_enforcement"].details["per_column"] == {"A": 0, "B": 1, "C": 0}
+    on, off = reports[True]["field_count_naive"], reports[False]["field_count_naive"]
+    assert (on.passed, on.violation_count, on.details) == (
+        off.passed,
+        off.violation_count,
+        off.details,
+    )
+    assert not off.passed and off.violation_count == 2
+    assert off.details["escalated"] is True
+    assert sinks[True] == sinks[False]
+    assert [r[0] for r in sinks[False]] == ["1", "7"]
+
+
+def test_names_failure_on_ragged_file_still_escalates_and_sinks(spark, tmp_path):
+    """A names-rule failure skips type enforcement (lazy path) but the
+    field-count escalation and the sink still run."""
+    csv = _ragged(tmp_path)
+    contract = TableContract(
+        columns=[ColumnSpec("A"), ColumnSpec("B"), ColumnSpec("MISSING", "NUMBER")],
+        field_separator="|",
+    )
+    runner = ValidationRunner(
+        spark, RunnerConfig(failure_base_dir=str(tmp_path / "sink"))
+    )
+    report = runner.validate_csv("RAG", csv, contract)
+    by_rule = {r.rule: r for r in report.results}
+    assert set(by_rule) == {"column_names", "field_count_naive"}
+    assert by_rule["column_names"].details["missing"] == ["MISSING"]
+    fc = by_rule["field_count_naive"]
+    assert not fc.passed and fc.details["escalated"] is True
+    assert spark.read.parquet(report.failure_sink_path).count() == 2
+    assert cache_is_empty(spark)
+
+
+def test_naive_count_pass_ignores_parser_corrupt_rows(spark, tmp_path):
+    """Without a string separator every line below has the right naive
+    field count, yet Spark's CSV parser flags a record (the stray quote).
+    The parser only decides when the line rule failed, so this passes and
+    no sink is written — even though the fused job parsed the file."""
+    p = tmp_path / "STRAY.csv"
+    p.write_text('A,B,C\n1,"x,3\n4,5,6\n')
+    contract = TableContract(
+        columns=[ColumnSpec("A"), ColumnSpec("B"), ColumnSpec("C")],
+        field_separator=",",
+        string_separator=None,
+    )
+    runner = ValidationRunner(
+        spark, RunnerConfig(failure_base_dir=str(tmp_path / "sink"))
+    )
+    report = runner.validate_csv("STRAY", str(p), contract)
+    assert report.ok, report.to_json()
+    fc = {r.rule: r for r in report.results}["field_count_naive"]
+    assert fc.passed and "escalated" not in fc.details
+    assert report.failure_sink_path is None
+    assert not (tmp_path / "sink").exists()
+    assert cache_is_empty(spark)
